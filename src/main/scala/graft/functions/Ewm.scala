@@ -124,81 +124,73 @@ object GraftFunctions {
 
   private[functions] def buildPsar(exprs: Seq[Expression]): Expression = {
     require(exprs.size == 5, "psar(high, low, af0, step, af_max)")
-    def d(e: Expression, what: String): Double = e match {
-      case Literal(v: java.lang.Double, _) => v.doubleValue()
-      case Literal(v: Decimal, _) => v.toDouble
-      case Literal(v: java.lang.Integer, _) => v.doubleValue()
-      case other => throw new IllegalArgumentException(s"psar: $what must be a numeric literal, got $other")
-    }
-    Psar(exprs(0), exprs(1), d(exprs(2), "af0"), d(exprs(3), "step"), d(exprs(4), "af_max"))
+    Psar(exprs(0), exprs(1), numeric("psar", exprs(2), "af0"),
+      numeric("psar", exprs(3), "step"), numeric("psar", exprs(4), "af_max"))
   }
 
+  /** A numeric literal argument of native function `fn`, as a double. */
+  private def numeric(fn: String, e: Expression, what: String): Double = e match {
+    case Literal(v: java.lang.Double, _) => v.doubleValue()
+    case Literal(v: Decimal, _) => v.toDouble
+    case Literal(v: java.lang.Integer, _) => v.doubleValue()
+    case other => throw new IllegalArgumentException(
+      s"$fn: $what must be a numeric literal, got $other")
+  }
+
+  /** Every native function's (name, builder), in registration order. */
+  private val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    ("ewm", build _),
+    ("psar", buildPsar _),
+    ("supertrend", exprs => {
+      require(exprs.size == 3, "supertrend(basic_ub, basic_lb, close)")
+      SuperTrend(exprs(0), exprs(1), exprs(2))
+    }),
+    ("holt", exprs => {
+      require(exprs.size == 3, "holt(value, alpha, beta)")
+      HoltLinear(exprs(0), numeric("holt", exprs(1), "alpha"), numeric("holt", exprs(2), "beta"))
+    }),
+    ("holt_winters", exprs => {
+      require(exprs.size == 5, "holt_winters(value, alpha, beta, gamma, period)")
+      val m = exprs(4) match {
+        case Literal(i: java.lang.Integer, _) => i.intValue()
+        case Literal(i: java.lang.Long, _) => i.intValue()
+        case other => throw new IllegalArgumentException(
+          s"holt_winters: period must be an integer literal, got $other")
+      }
+      HoltWinters(exprs(0), numeric("holt_winters", exprs(1), "alpha"),
+        numeric("holt_winters", exprs(2), "beta"), numeric("holt_winters", exprs(3), "gamma"), m)
+    }),
+    ("var_ewm", exprs => {
+      require(exprs.size == 2, "var_ewm(value, alpha)")
+      VarEwm(exprs(0), exprs(1))
+    }),
+    ("hash32", exprs => Hash32Expr(exprs.head)),
+    ("hash61", exprs => Hash61Expr(exprs.head)),
+    ("dotp", exprs => DotProductExpr(exprs(0), exprs(1))),
+    ("sig_matches", exprs => SigMatchesExpr(exprs(0), exprs(1))),
+    ("assign_cell", exprs => AssignCellExpr(exprs(0), exprs(1), exprs(2))),
+    ("mg_topk", exprs => {
+      val k = exprs(1) match {
+        case Literal(i: java.lang.Integer, _) => i.intValue()
+        case Literal(l: java.lang.Long, _) => l.intValue()
+        case other => throw new IllegalArgumentException(
+          s"mg_topk: k must be an integer literal, got $other")
+      }
+      MgTopK(exprs.head, k).toAggregateExpression()
+    }))
+
+  /** Registers the native functions on `spark` — once per session. Operator
+    * call sites invoke this lazily (plain sessions built without
+    * [[GraftExtensions]] rely on it), so a function the session already has
+    * keeps its builder: no re-registration per call, and no
+    * "replaced a previously registered function" WARN per call.
+    */
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "ewm", build, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "psar", buildPsar, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "supertrend", exprs => {
-        require(exprs.size == 3, "supertrend(basic_ub, basic_lb, close)")
-        SuperTrend(exprs(0), exprs(1), exprs(2))
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "holt", exprs => {
-        require(exprs.size == 3, "holt(value, alpha, beta)")
-        def d(e: Expression, what: String): Double = e match {
-          case Literal(v: java.lang.Double, _) => v.doubleValue()
-          case Literal(v: Decimal, _) => v.toDouble
-          case Literal(v: java.lang.Integer, _) => v.doubleValue()
-          case other => throw new IllegalArgumentException(
-            s"holt: $what must be a numeric literal, got $other")
-        }
-        HoltLinear(exprs(0), d(exprs(1), "alpha"), d(exprs(2), "beta"))
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "holt_winters", exprs => {
-        require(exprs.size == 5, "holt_winters(value, alpha, beta, gamma, period)")
-        def d(e: Expression, what: String): Double = e match {
-          case Literal(v: java.lang.Double, _) => v.doubleValue()
-          case Literal(v: Decimal, _) => v.toDouble
-          case Literal(v: java.lang.Integer, _) => v.doubleValue()
-          case other => throw new IllegalArgumentException(
-            s"holt_winters: $what must be a numeric literal, got $other")
-        }
-        val m = exprs(4) match {
-          case Literal(i: java.lang.Integer, _) => i.intValue()
-          case Literal(i: java.lang.Long, _) => i.intValue()
-          case other => throw new IllegalArgumentException(
-            s"holt_winters: period must be an integer literal, got $other")
-        }
-        HoltWinters(exprs(0), d(exprs(1), "alpha"), d(exprs(2), "beta"),
-          d(exprs(3), "gamma"), m)
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "var_ewm", exprs => {
-        require(exprs.size == 2, "var_ewm(value, alpha)")
-        VarEwm(exprs(0), exprs(1))
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hash32", exprs => Hash32Expr(exprs.head), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hash61", exprs => Hash61Expr(exprs.head), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dotp", exprs => DotProductExpr(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sig_matches", exprs => SigMatchesExpr(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "assign_cell", exprs => AssignCellExpr(exprs(0), exprs(1), exprs(2)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "mg_topk", exprs => {
-        val k = exprs(1) match {
-          case Literal(i: java.lang.Integer, _) => i.intValue()
-          case Literal(l: java.lang.Long, _) => l.intValue()
-          case other => throw new IllegalArgumentException(
-            s"mg_topk: k must be an integer literal, got $other")
-        }
-        MgTopK(exprs.head, k).toAggregateExpression()
-      }, "scala_udf")
+    val registry = spark.sessionState.functionRegistry
+    builders.foreach { case (name, builder) =>
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, builder, "scala_udf")
+    }
   }
 }
 

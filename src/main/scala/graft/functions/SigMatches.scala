@@ -48,12 +48,17 @@ object SigMatchesExpr {
   /** Static entry point shared by interpreted eval and generated code —
     * count over the shorter length, exactly like the zip_with fold it
     * replaces (signatures are fixed-k by construction, so the min is moot).
+    * A slot where either element is null never matches: `x = y` is null
+    * there, and the fold's `IF(null, 1, 0)` counts 0.
     */
   def matches(a: ArrayData, b: ArrayData): Int = {
     val n = math.min(a.numElements(), b.numElements())
     var c = 0
     var i = 0
-    while (i < n) { if (a.getLong(i) == b.getLong(i)) c += 1; i += 1 }
+    while (i < n) {
+      if (!a.isNullAt(i) && !b.isNullAt(i) && a.getLong(i) == b.getLong(i)) c += 1
+      i += 1
+    }
     c
   }
 }

@@ -83,6 +83,23 @@ object Dedup {
     // long cluster run prefer reliable `checkpoint()` for multi-hour jobs.
     df.localCheckpoint(true)
 
+  /** Materialize a multi-consumer frame ONCE — unless its optimized plan
+    * already is materialized: a root `LogicalRDD` whose RDD is persisted or
+    * checkpointed (a prior [[cachedForReuse]]; re-checkpointing an
+    * incremental store copies it once more per delivery for no reuse
+    * benefit), or a driver-local `LocalRelation`. A `LogicalRDD` over an
+    * UNPERSISTED RDD (`spark.createDataFrame(rdd, schema)`) re-runs the
+    * RDD's whole lineage on every scan, so it is materialized like any
+    * other plan.
+    */
+  def materializedOnce(df: DataFrame): DataFrame =
+    df.queryExecution.optimizedPlan match {
+      case r: org.apache.spark.sql.execution.LogicalRDD
+          if r.rdd.getStorageLevel.isValid || r.rdd.isCheckpointed => df
+      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => df
+      case _ => cachedForReuse(df)
+    }
+
   /** Iterative-loop lineage cut: eagerly localCheckpoint `df` and hand back
     * the re-rooted frame plus a release thunk that unpersists the backing
     * blocks deterministically (loops shouldn't wait for the GC-driven

@@ -106,41 +106,35 @@ class PlanShapeSpec extends AnyFunSuite {
     // force the SCALED path (a 1000-row input would legitimately take the
     // size-gated single-bucket small path — pinned separately below); this
     // pin is about the at-scale shape
-    val prev = spark.conf.get("spark.graft.prefixsum.smallRows", "")
-    spark.conf.set("spark.graft.prefixsum.smallRows", "0")
-    try {
-      val fast = graft.operators.PrefixSum.withStartOffset(df, "k", "v", "off")
-      val p = plan(fast)
-      // the running sum must NEVER serialize an UNBOUNDED input into one
-      // task: the windowed fast path (round 15) partitions its window by the
-      // equal-width bucket id, so the plan may contain Window nodes but no
-      // single-partition exchange
-      assert(!p.contains("Exchange SinglePartition"),
-        "prefix sum must not funnel through a single partition:\n" + p)
-      // partition-count probe with AQE off: under AQE the tiny test shuffle is
-      // legitimately coalesced to one partition (data-sized, not a plan cliff)
-      graft.operators.Dedup.withStaticPlan(spark) {
-        assert(fast.rdd.getNumPartitions > 1, "output must stay partitioned, not one task")
-      }
-      // bucketed windowed path shuffles in Catalyst (ShuffledRowRDD); the
-      // sampled-range RDD fallback shuffles at the RDD level (ShuffledRDD) —
-      // either way the per-bucket order must come from a shuffle upstream
-      assert(fast.rdd.toDebugString.contains("ShuffledR"),
-        "order must come from a shuffle upstream")
-      val naive = df.withColumn("off",
-        coalesce(sum(col("v")).over(
-          Window.orderBy("k").rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      val a = fast.orderBy("k").collect().map(r => (r.getLong(0), r.getLong(2)))
-      val b = naive.orderBy("k").collect().map(r => (r.getLong(0), r.getLong(2)))
-      assert(a.toSeq == b.toSeq)
-      // windows: contiguous ids, offsets within budget
-      val w = graft.operators.PrefixSum.contextWindows(df, "k", "v", budget = 100L)
-      assert(w.filter(col("window_offset") >= 100 || col("window_offset") < 0).count() == 0)
-      assert(w.filter(col("window_id") =!= expr("start_offset div 100")).count() == 0)
-    } finally {
-      if (prev.isEmpty) spark.conf.unset("spark.graft.prefixsum.smallRows")
-      else spark.conf.set("spark.graft.prefixsum.smallRows", prev)
+    import graft.operators.PrefixSum
+    val fast = PrefixSum.scan(df, "k", PrefixSum.startOffsets(Seq("v" -> "off")),
+      smallRows = 0)._1
+    val p = plan(fast)
+    // the running sum must NEVER serialize an UNBOUNDED input into one
+    // task: the windowed fast path (round 15) partitions its window by the
+    // equal-width bucket id, so the plan may contain Window nodes but no
+    // single-partition exchange
+    assert(!p.contains("Exchange SinglePartition"),
+      "prefix sum must not funnel through a single partition:\n" + p)
+    // partition-count probe with AQE off: under AQE the tiny test shuffle is
+    // legitimately coalesced to one partition (data-sized, not a plan cliff)
+    graft.operators.Dedup.withStaticPlan(spark) {
+      assert(fast.rdd.getNumPartitions > 1, "output must stay partitioned, not one task")
     }
+    // every scaled bucket map shuffles in Catalyst (ShuffledRowRDD) — the
+    // per-bucket order must come from a shuffle upstream
+    assert(fast.rdd.toDebugString.contains("ShuffledR"),
+      "order must come from a shuffle upstream")
+    val naive = df.withColumn("off",
+      coalesce(sum(col("v")).over(
+        Window.orderBy("k").rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+    val a = fast.orderBy("k").collect().map(r => (r.getLong(0), r.getLong(2)))
+    val b = naive.orderBy("k").collect().map(r => (r.getLong(0), r.getLong(2)))
+    assert(a.toSeq == b.toSeq)
+    // windows: contiguous ids, offsets within budget
+    val w = graft.operators.PrefixSum.contextWindows(df, "k", "v", budget = 100L)
+    assert(w.filter(col("window_offset") >= 100 || col("window_offset") < 0).count() == 0)
+    assert(w.filter(col("window_id") =!= expr("start_offset div 100")).count() == 0)
   }
 
   test("prefix sum small gate: a sub-threshold input takes the single-bucket path, same bytes") {
@@ -170,28 +164,23 @@ class PlanShapeSpec extends AnyFunSuite {
     val df = spark.range(0, 20000).toDF("k")
       .union(spark.range(1, 2).select(lit(1L << 40).as("k")))
       .withColumn("v", lit(1L))
-    val prev = spark.conf.get("spark.graft.prefixsum.smallRows", "")
-    spark.conf.set("spark.graft.prefixsum.smallRows", "0") // scaled path
-    try {
-      val out = graft.operators.PrefixSum.withStartOffset(df, "k", "v", "off")
-      // correctness first: offsets equal the rank in k order (v ≡ 1)
-      val bad = out.filter(col("off") =!=
-        when(col("k") === lit(1L << 40), lit(20000L)).otherwise(col("k")))
-      assert(bad.count() == 0, "refined offsets must equal the sequential scan")
-      // balance: the per-bucket pass-1 totals (v ≡ 1 → row counts) from the
-      // execution evidence must respect the refinement bound
-      val recs = graft.operators.PrefixSum.drainDebug()
-        .filter(r => r.op == "withStartOffsets" && r.mode.endsWith("refined"))
-      assert(recs.nonEmpty, "clustered key must take the refined mode")
-      val counts = recs.last.passTotals.map(_.head)
-      val parallelism = spark.sparkContext.defaultParallelism
-      val even = math.max(1L, 20001L / math.max(1, parallelism * 8))
-      assert(counts.max <= 4 * even,
-        s"refined max bucket ${counts.max} exceeds 4x the even share $even")
-    } finally {
-      if (prev.isEmpty) spark.conf.unset("spark.graft.prefixsum.smallRows")
-      else spark.conf.set("spark.graft.prefixsum.smallRows", prev)
-    }
+    import graft.operators.PrefixSum
+    val out = PrefixSum.scan(df, "k", PrefixSum.startOffsets(Seq("v" -> "off")),
+      smallRows = 0)._1 // scaled path
+    // correctness first: offsets equal the rank in k order (v ≡ 1)
+    val bad = out.filter(col("off") =!=
+      when(col("k") === lit(1L << 40), lit(20000L)).otherwise(col("k")))
+    assert(bad.count() == 0, "refined offsets must equal the sequential scan")
+    // balance: the per-bucket pass-1 totals (v ≡ 1 → row counts) from the
+    // execution evidence must respect the refinement bound
+    val recs = graft.operators.PrefixSum.drainDebug()
+      .filter(r => r.op == "withStartOffsets" && r.mode.endsWith("refined"))
+    assert(recs.nonEmpty, "clustered key must take the refined mode")
+    val counts = recs.last.passTotals.map(_.head)
+    val parallelism = spark.sparkContext.defaultParallelism
+    val even = math.max(1L, 20001L / math.max(1, parallelism * 8))
+    assert(counts.max <= 4 * even,
+      s"refined max bucket ${counts.max} exceeds 4x the even share $even")
   }
 
   test("q_sessionize: session rollup reuses the window's user_id partitioning — one hash exchange") {

@@ -5,11 +5,14 @@ import org.apache.spark.sql.functions._
 
 /** Pins the EXACT harness path that caught the round-3 mx3 failure: Verify
   * writes every query through `.coalesce(1).write.parquet`, and a narrow
-  * coalesce FUSES downstream mapPartitions stages into one task — any
-  * operator that indexes per-partition state by `TaskContext.getPartitionId()`
-  * sees task id 0 for every parent split and silently corrupts its output.
-  * PrefixSum must therefore key its base-offset array by the SPLIT index
-  * (`mapPartitionsWithIndex`), which coalesce preserves.
+  * coalesce FUSES downstream stages into one task — any operator that
+  * indexes per-partition state by the running task's id
+  * (`TaskContext.getPartitionId()`, `spark_partition_id()`) sees 0 for every
+  * parent split and silently corrupts its output. PrefixSum's scan kernel
+  * therefore joins each row's base offset by a bucket id that is a column
+  * of the data — an expression of the key, or for the range map a split id
+  * frozen inside the checkpoint that made the splits — which coalesce
+  * cannot change.
   */
 class PrefixSumHarnessSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
