@@ -24,7 +24,7 @@ import org.apache.spark.sql.SparkSession
   *
   * Suite isolation: BENCH_r05 recorded 613 s driver-side for a suite that
   * runs in 169 s on the same box when run alone, with individual queries
-  * degrading 5–26× against their ProfQueries steady state — intra-JVM
+  * degrading 5–26× against their `graft.tools.Trace` steady state — intra-JVM
   * accumulation (JIT/code-cache churn, heap aging) compounded by whatever
   * else shares the machine. The suite therefore runs as `SHARDS` (default 3)
   * sequential CHILD JVMs, each with a fresh code cache, heap, and Spark
@@ -35,7 +35,7 @@ import org.apache.spark.sql.SparkSession
   *
   * Measurement protocol (r13): code-warm, data-cold. BENCH_r12's three
   * largest entries were first-execution artifacts, not plans — q_pareto
-  * recorded 19.5 s against a 1.5 s ProfQueries steady state, with the gap
+  * recorded 19.5 s against a 1.5 s steady state (`graft.tools.Trace`), with the gap
   * entirely Janino compilation + HotSpot-interpreted generated code +
   * ambient sandbox stalls. The DuckDB oracle lane has no analog cost (no
   * per-query JIT; its single cold run IS its steady state), so recording
@@ -109,43 +109,7 @@ object Bench {
     (used, max, if (max > 0) 100.0 * used / max else 0.0)
   }
 
-  /** Cumulative JIT compilation ms and GC ms — per-query DELTAS of these
-    * attribute a slow query to compilation/GC churn in-band, so a ±3× wobble
-    * on unchanged code (the r3 sim1–sim4 question) is diagnosable from the
-    * bench stderr alone rather than re-run archaeology.
-    */
-  private def jitGcMs(): (Long, Long) = {
-    import scala.jdk.CollectionConverters._
-    val jit = Option(java.lang.management.ManagementFactory.getCompilationMXBean)
-      .filter(_.isCompilationTimeMonitoringSupported)
-      .map(_.getTotalCompilationTime).getOrElse(0L)
-    val gc = java.lang.management.ManagementFactory.getGarbageCollectorMXBeans.asScala
-      .map(b => math.max(b.getCollectionTime, 0L)).sum
-    (jit, gc)
-  }
-
   private def r3(x: Double): Double = math.rint(x * 1000) / 1000
-
-  /** Counts Spark jobs, completed stages, and launched tasks — the
-    * BENCH_r06 diagnosis made job count THE driver-environment scale lever
-    * (the stall there charges wall-clock per sequential job, and a 100×-data
-    * run multiplies per-job overhead identically), so the per-query telemetry
-    * records it directly: a job-count regression is a one-line diff instead
-    * of forensics.
-    */
-  private final class JobStageCounter extends org.apache.spark.scheduler.SparkListener {
-    val jobs = new java.util.concurrent.atomic.AtomicLong
-    val stages = new java.util.concurrent.atomic.AtomicLong
-    val tasks = new java.util.concurrent.atomic.AtomicLong
-    override def onJobStart(
-        e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-      jobs.incrementAndGet(); ()
-    }
-    override def onStageCompleted(
-        e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-      stages.incrementAndGet(); tasks.addAndGet(e.stageInfo.numTasks.toLong); ()
-    }
-  }
 
   private def telemetryPath = java.nio.file.Paths.get("BENCH_TELEMETRY.txt")
 
@@ -157,42 +121,22 @@ object Bench {
   }
 
   /** Run a slice of the sorted query list in THIS JVM; returns
-    * (name, sec, failed). `stopSession = false` is the spec seam (the
-    * shared test JVM must keep its session).
+    * (name, sec, failed). `session` is the spec seam: the shared test JVM
+    * passes (and keeps) its own session; otherwise a `GraftSession` is
+    * built and stopped.
     */
   private[graft] def runQueries(
-      sfDir: String, cpus: String, shardTag: String,
+      sfDir: String, shardTag: String,
       slice: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)],
-      totalN: Int, stopSession: Boolean = true): Seq[(String, Double, Boolean)] = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Tables.events normalizes NTZ parquet through a session-TZ-sensitive
-      // cast; Verify pins UTC and the DuckDB oracle is UTC, so the bench
-      // session must match or event instants shift on a non-UTC host.
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      totalN: Int, session: Option[SparkSession] = None): Seq[(String, Double, Boolean)] = {
+    val spark = session.getOrElse(GraftSession())
     // Warm up the session (codegen, parquet footers, FS cache) so the first
     // timed query doesn't absorb one-time startup cost.
     Tables.names.foreach { n =>
       try Tables(spark, sfDir, n).count() catch { case _: Throwable => () }
     }
-    // drop caches a pipeline persisted for its own reuse so they don't
-    // squeeze later queries' memory: CacheManager entries (Dataset.persist)
-    // AND RDD-level blocks (the localCheckpoint reuse caches, which
-    // clearCache cannot see and ContextCleaner frees only on driver GC).
-    // EXCEPTION: blocks backing graft.queries.Shared memo entries — the
-    // cross-query frames dd11/dd12/dd14 share survive the sweep (bounded:
-    // one pair table + one label table per sf dir).
-    def sweepCaches(): Unit = {
-      spark.catalog.clearCache()
-      val keep = graft.queries.Shared.protectedRddIds
-      spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-        if (!keep.contains(id)) rdd.unpersist(false)
-      }
-    }
+    // Every run sweeps its reuse caches; the memo frames dd11/dd12/dd14
+    // share survive (bounded: one pair and one label table per sf dir).
     // Code-warm pass (see the protocol note above): run every query of the
     // slice once at the tiny warmup SF so Janino compilation and HotSpot
     // JIT of the generated kernels happen OUTSIDE the timed loop. Memo
@@ -220,7 +164,7 @@ object Bench {
       val w0 = System.nanoTime()
       slice.foreach { case (_, fn) =>
         try { fn(spark, wd).count() } catch { case _: Throwable => () }
-        sweepCaches()
+        GraftSession.sweepCaches(spark)
       }
       // release the warmup pass's debris before the timed loop: ~100
       // queries of swept localCheckpoint blocks and broadcasts free on
@@ -230,17 +174,11 @@ object Bench {
       logTelemetry(f"[bench$shardTag] warmup pass: ${slice.size}%d queries at " +
         f"$wd in ${(System.nanoTime() - w0) / 1e9}%.1f s (untimed)")
     }
-    val counter = new JobStageCounter
-    spark.sparkContext.addSparkListener(counter)
-    def drainedCounts(): (Long, Long, Long) = {
-      org.apache.spark.graft.ListenerBusDrain.waitUntilEmpty(spark.sparkContext)
-      (counter.jobs.get, counter.stages.get, counter.tasks.get)
-    }
+    val trace = QueryTrace(spark)
     val rerunFloorSec = 3.0
     val results = slice.zipWithIndex.map { case ((name, fn), idx) =>
       def timedRun(): (Double, String, Option[String]) = {
-        val (jit0, gc0) = jitGcMs()
-        val (jobs0, stages0, tasks0) = drainedCounts()
+        val before = trace.snapshot()
         val t0 = System.nanoTime()
         // a query that throws is an ERROR, never a timing (r13 swallowed
         // the Throwable and recorded elapsed-until-throw as a success)
@@ -250,12 +188,9 @@ object Bench {
             Some(s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(200)}")
           }
         val dt = (System.nanoTime() - t0) / 1e9
-        val (jobs1, stages1, tasks1) = drainedCounts()
-        sweepCaches()
-        val (jit1, gc1) = jitGcMs()
-        (dt,
-          f"jit +${jit1 - jit0}%dms gc +${gc1 - gc0}%dms  jobs ${jobs1 - jobs0}%d " +
-            f"stages ${stages1 - stages0}%d tasks ${tasks1 - tasks0}%d", err)
+        val cost = trace.snapshot() - before
+        GraftSession.sweepCaches(spark)
+        (dt, cost.summary, err)
       }
       val memoBefore = graft.queries.Shared.memoKeys
       graft.queries.Shared.drainConsumed() // reset hit tracking for this query
@@ -271,11 +206,12 @@ object Bench {
       // (query, memo_build_s) split: shared-kernel build cost is charged
       // to its first consumer BY DESIGN; the split line makes that
       // attribution explicit instead of reading as plan cost.
-      val memoTele =
+      def memoTeleAs(label: String) =
         if (builtKeys.isEmpty) ""
         else builtKeys.toSeq.sorted.map(k =>
           f"$k=${graft.queries.Shared.buildSeconds(k).getOrElse(0.0)}%.3fs")
-          .mkString("  memo built [", ", ", "]")
+          .mkString(s"  memo $label [", ", ", "]")
+      val memoTele = memoTeleAs("built")
       // heavy-tail stall guard: one back-to-back re-run, record the min,
       // log both (see the protocol note — never silent). A first run that
       // BUILT cross-query memo entries re-runs with exactly those entries
@@ -289,11 +225,7 @@ object Bench {
         else {
           if (builtKeys.nonEmpty) graft.queries.Shared.evict(builtKeys)
           val (dt2, tele2, err2) = timedRun()
-          val rebuilt =
-            if (builtKeys.isEmpty) ""
-            else builtKeys.toSeq.sorted.map(k =>
-              f"$k=${graft.queries.Shared.buildSeconds(k).getOrElse(0.0)}%.3fs")
-              .mkString("  memo rebuilt [", ", ", "]")
+          val rebuilt = memoTeleAs("rebuilt")
           if (err2.nonEmpty) (dt1, tele1 + memoTele + consumedTele) // keep the clean run
           else (math.min(dt1, dt2),
             f"$tele2 (min of $dt1%.3f/$dt2%.3f s; run1 $tele1)$memoTele$consumedTele$rebuilt")
@@ -310,7 +242,8 @@ object Bench {
             "(raise -XX:ReservedCodeCacheSize)")
       (name, dt, err.nonEmpty)
     }
-    if (stopSession) spark.stop()
+    trace.stop()
+    if (session.isEmpty) spark.stop()
     results
   }
 
@@ -415,8 +348,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
     // dev-only subset filter (comma-separated names): reproduce one shard
     // region in isolation when attributing a slow entry to shard context
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
@@ -427,7 +358,7 @@ object Bench {
       case Some(spec) => // child: run my contiguous slice, write the artifact, exit
         val Array(i, k) = spec.split('/').map(_.toInt)
         val slices = partition(ordered, k)
-        val results = runQueries(sfDir, cpus, s" $i/$k", slices(i), ordered.size)
+        val results = runQueries(sfDir, s" $i/$k", slices(i), ordered.size)
         val qs = (results.map { case (n, v, _) => s""""$n":$v""" } ++
           results.collect { case (n, _, true) => s""""!$n":1""" })
           .mkString("{", ",", "}")
@@ -441,7 +372,7 @@ object Bench {
         try java.nio.file.Files.deleteIfExists(telemetryPath) catch { case _: Throwable => () }
         var results =
           (if (shards > 1) runSharded(shards, ordered.map(_._1)) else None)
-            .getOrElse(runQueries(sfDir, cpus, "", ordered, ordered.size))
+            .getOrElse(runQueries(sfDir, "", ordered, ordered.size))
         // Stall guard against the COMMITTED steady references: entries
         // >3× steady get ONE end-of-suite rerun in a fresh JVM (the
         // ambient window that inflated them has usually passed by suite
@@ -488,15 +419,30 @@ object Bench {
     }._2
   }
 
+  /** The total record; the file copy adds the full-precision map as
+    * `queriesField`. The headline total sums SUCCESSFUL queries only — a
+    * failed query's elapsed-until-throw is a partial timing that would skew
+    * cross-round total comparisons (ADVICE r14); with errors the full sum
+    * is published separately. `cpus` is the session's core count, which is
+    * also its shuffle-partition count.
+    */
+  private[graft] def totalRecord(results: Seq[(String, Double, Boolean)], sfDir: String,
+      stalled: Seq[String], cpus: Int, queriesField: String = ""): String = {
+    val total = results.collect { case (_, v, false) => v }.sum
+    val errors = results.count(_._3)
+    val errList =
+      if (errors == 0) ""
+      else results.collect { case (k, _, true) => s"\"$k\"" }
+        .mkString(""","failed":[""", ",", "]") +
+        s""","total_with_errors":${r3(results.map(_._2).sum)}"""
+    val stalledList =
+      if (stalled.isEmpty) ""
+      else stalled.map(q => s"\"$q\"").mkString(""","stalled":[""", ",", "]")
+    s"""{"metric":"total","value":${r3(total)},"unit":"sec","n_queries":${results.size},"errors":$errors$errList$stalledList$queriesField,"sf":"$sfDir","cpus":$cpus,"shuffle_partitions":$cpus}"""
+  }
+
   private def emit(results: Seq[(String, Double, Boolean)], sfDir: String,
       stalled: Seq[String]): Unit = {
-    // the headline total sums SUCCESSFUL queries only — a failed query's
-    // elapsed-until-throw is a partial timing that would skew cross-round
-    // total comparisons (ADVICE r14); with errors the full sum is published
-    // separately and the run still exits 2.
-    val total = results.collect { case (_, v, false) => v }.sum
-    val totalWithErrors = results.map(_._2).sum
-    val errors = results.count(_._3)
     // Per-query times as SHORT sorted chunks (8 queries/line, ms precision),
     // each line self-describing — so a bounded tail-window capture holds the
     // COMPLETE map (BENCH_r01–r04 clipped the head of the old single ~4 KB
@@ -507,30 +453,20 @@ object Bench {
       val qs = chunk.map { case (k, v, _) => s"\"$k\":${r3(v)}" }.mkString("{", ",", "}")
       println(s"""{"metric":"queries_part","part":${i + 1},"of":${chunks.size},"queries":$qs}""")
     }
-    val errList =
-      if (errors == 0) ""
-      else results.collect { case (k, _, true) => s"\"$k\"" }
-        .mkString(""","failed":[""", ",", "]") +
-        s""","total_with_errors":${r3(totalWithErrors)}"""
-    val stalledList =
-      if (stalled.isEmpty) ""
-      else stalled.map(q => s"\"$q\"").mkString(""","stalled":[""", ",", "]")
-    val totalLine =
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","n_queries":${results.size},"errors":$errors$errList$stalledList,"sf":"$sfDir"}"""
-    println(totalLine)
+    val cpus = GraftSession.cpus()
+    println(totalRecord(results, sfDir, stalled, cpus))
     // File artifacts too, so the record survives any stdout-protocol
     // mismatch — and a repo-root copy (BENCH_QUERIES.json, committed per
     // round as BENCH_QUERIES_r{N}.json) so round-over-round per-query
     // diffs never depend on scraping the driver's stdout tail window.
     val qsFull = results.map { case (k, v, _) => s"\"$k\":$v" }.mkString("{", ",", "}")
-    val fullRecord =
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","n_queries":${results.size},"errors":$errors$errList$stalledList,"queries":$qsFull,"sf":"$sfDir"}""" + "\n"
+    val fullRecord = totalRecord(results, sfDir, stalled, cpus, s""","queries":$qsFull""") + "\n"
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get("target/bench_total.json"), fullRecord)
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get("BENCH_QUERIES.json"), fullRecord)
     catch { case _: Throwable => () }
     // a bench with ANY failed query must not read as a clean record
-    if (errors > 0) sys.exit(2)
+    if (results.exists(_._3)) sys.exit(2)
   }
 }

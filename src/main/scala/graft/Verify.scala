@@ -128,15 +128,7 @@ object Verify {
     // Optional trailing args: run only these queries (mirrors tools/check.py's
     // `[query ...]` filter — dev loop; the driver passes exactly 2 args).
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     new java.io.File(outDir).mkdirs()
     // Stale-proofing: a query's output dir is DELETED before the attempt and
     // a `_FAILED` marker is written on exception, so a transient mid-suite
@@ -152,7 +144,6 @@ object Verify {
       val dest = new java.io.File(s"$outDir/$name")
       rmRf(dest)
       graft.operators.PrefixSum.drainDebug() // clear stale recs from prior queries
-      graft.queries.Shared.clear() // hermetic gate: no cross-query reuse here
       val status =
         try {
           fn(spark, sfDir).coalesce(1).write.mode("overwrite")
@@ -200,8 +191,8 @@ object Verify {
             s"""{"status":"ok","checksum_error":${q(e.toString)}$bounds}"""
           }
         }
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      graft.queries.Shared.clear() // hermetic gate: no cross-query reuse here
+      GraftSession.sweepCaches(spark)
       name -> detail
     }
     // Run manifest: per-query status + content checksum, so a grader (or a

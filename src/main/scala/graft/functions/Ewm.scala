@@ -93,9 +93,9 @@ case class Ewm(child: Expression, alpha: Double, minPeriods: Int,
     copy(child = newChildren.head)
 }
 
-/** Registration: `GraftFunctions.register(spark)` (or install
-  * [[GraftExtensions]] via `.withExtensions`) exposes `ewm(x, alpha,
-  * min_periods[, ignore_na])` to SQL and `expr(...)`.
+/** Registration: `GraftFunctions.register(spark)` exposes `ewm(x, alpha,
+  * min_periods[, ignore_na])` and the other native functions to SQL and
+  * `expr(...)`.
   */
 object GraftFunctions {
   private[functions] def build(exprs: Seq[Expression]): Expression = {
@@ -180,10 +180,10 @@ object GraftFunctions {
     }))
 
   /** Registers the native functions on `spark` — once per session. Operator
-    * call sites invoke this lazily (plain sessions built without
-    * [[GraftExtensions]] rely on it), so a function the session already has
-    * keeps its builder: no re-registration per call, and no
-    * "replaced a previously registered function" WARN per call.
+    * call sites invoke this lazily (any session reaches them, including
+    * plain ones built outside [[graft.GraftSession]]), so a function the
+    * session already has keeps its builder: no re-registration per call,
+    * and no "replaced a previously registered function" WARN per call.
     */
   def register(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
@@ -192,13 +192,4 @@ object GraftFunctions {
         registry.createOrReplaceTempFunction(name, builder, "scala_udf")
     }
   }
-}
-
-/** `SparkSession.builder.withExtensions(new GraftExtensions)` installer. */
-class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit =
-    e.injectFunction((
-      FunctionIdentifier("ewm"),
-      new ExpressionInfo(classOf[Ewm].getName, "ewm"),
-      (exprs: Seq[Expression]) => GraftFunctions.build(exprs)))
 }

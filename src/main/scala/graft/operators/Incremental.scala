@@ -242,8 +242,8 @@ object Incremental {
         // native equal-component count (SigMatchesExpr): same integer as the
         // aggregate(zip_with(...)) fold it replaces, one codegen'd primitive
         // loop per candidate pair instead of two interpreted HOFs — the
-        // verify stage was the kernel's CPU hot spot (round 16 ProfStages:
-        // 11.5 s CPU on 65 surviving pairs at sf0.1)
+        // verify stage was the kernel's CPU hot spot (round 16, stage CPU in
+        // `graft.tools.Trace`: 11.5 s CPU on 65 surviving pairs at sf0.1)
         .withColumn("matches", call_function("sig_matches", col("sd"), col("se")))
         .filter(col("matches") * thresholdDen >= k * thresholdNum)
         .select(col("d_id"), col("e_id"))

@@ -960,9 +960,9 @@ object Similarity {
     // Catalyst DAG per round — the literal codebook makes every round's plan
     // NEW, so each of the `iters` rounds paid analyzer + optimizer + codegen
     // on the driver (~0.2 s × iters × every kmeansFromPrepared consumer,
-    // the dd26/mx29 ProfStages planning gap). An RDD round has NO planning:
-    // the codebook travels as a per-round broadcast and the kernel below
-    // mirrors the Catalyst path bit-exactly —
+    // the dd26/mx29 planning gap in `graft.tools.Trace` stages). An RDD
+    // round has NO planning: the codebook travels as a per-round broadcast
+    // and the kernel below mirrors the Catalyst path bit-exactly —
     //  - assignment mirrors [[graft.functions.AssignCellExpr.assign]]
     //    (same sequential-fold dot, strict->, ties to lowest id, NaN skip);
     //  - the cap-smallest-(sampleHash, id) member sample is a SET function,

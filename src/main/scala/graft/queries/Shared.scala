@@ -97,7 +97,7 @@ object Shared {
     }
   }
 
-  private def backingRddIds(df: DataFrame): Set[Int] =
+  private[graft] def backingRddIds(df: DataFrame): Set[Int] =
     df.queryExecution.analyzed.collect {
       case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
     }.toSet

@@ -18,43 +18,31 @@ import org.apache.spark.sql.functions._
   */
 object ScaleSmoke {
 
-  /** Aggregated shuffle traffic + stage count across one smoke item. */
-  private final class ShuffleMeter extends org.apache.spark.scheduler.SparkListener {
-    val read = new java.util.concurrent.atomic.AtomicLong
-    val write = new java.util.concurrent.atomic.AtomicLong
-    val stages = new java.util.concurrent.atomic.AtomicLong
-    override def onStageCompleted(
-        s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-      val m = s.stageInfo.taskMetrics
-      if (m != null) {
-        read.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-        write.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-      }
-      // attribute failures to the operator call site (stage details carry it)
-      s.stageInfo.failureReason.foreach { why =>
-        System.err.println(s"[smoke] FAILED stage ${s.stageInfo.stageId} " +
-          s"'${s.stageInfo.name}': ${why.linesIterator.take(2).mkString(" | ")}\n" +
-          s"  details: ${s.stageInfo.details.linesIterator.take(4).mkString(" | ")}")
-      }
-      stages.incrementAndGet(); ()
+  /** Runs one smoke item and prints its wall time, stage count and shuffle
+    * read/write MB; failed stages go to stderr under their operator call
+    * site. Returns the result and the item's shuffle read/write bytes.
+    */
+  private def timed[A](trace: graft.QueryTrace, name: String)(body: => A): (A, Long, Long) = {
+    val before = trace.snapshot()
+    val t0 = System.nanoTime()
+    var d = before
+    val r = try body finally {
+      d = trace.snapshot() - before
+      for (st <- d.stageLog; why <- st.failure)
+        System.err.println(s"[smoke] FAILED stage ${st.id} '${st.name}': " +
+          why.linesIterator.take(2).mkString(" | "))
     }
-    def reset(): Unit = { read.set(0); write.set(0); stages.set(0) }
+    println(f"$name%-52s ${(System.nanoTime() - t0) / 1e9}%7.2f s  " +
+      f"stages ${d.stages}%3d  shuffle r/w " +
+      f"${d.shuffleRead / 1048576.0}%.0f/${d.shuffleWrite / 1048576.0}%.0f MB")
+    (r, d.shuffleRead, d.shuffleWrite)
   }
 
   private def graphTier(spark: SparkSession, n: Long): Unit = {
-    val meter = new ShuffleMeter
-    spark.sparkContext.addSparkListener(meter)
-    def t[A](name: String)(body: => A): A = {
-      org.apache.spark.graft.ListenerBusDrain.waitUntilEmpty(spark.sparkContext)
-      meter.reset()
-      val t0 = System.nanoTime()
-      val r = body
-      org.apache.spark.graft.ListenerBusDrain.waitUntilEmpty(spark.sparkContext)
-      println(f"$name%-34s ${(System.nanoTime() - t0) / 1e9}%7.2f s  " +
-        f"stages ${meter.stages.get}%3d  shuffle r/w " +
-        f"${meter.read.get / 1048576.0}%.0f/${meter.write.get / 1048576.0}%.0f MB")
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      r
+    val trace = graft.QueryTrace(spark)
+    def t(name: String)(body: => Unit): Unit = {
+      timed(trace, name)(body)
+      graft.GraftSession.sweepCaches(spark)
     }
     t(s"cc_star chains n=$n (distributed)") {
       // n/10 disjoint 10-node chains: ~0.9n edges, ~17× past smallGraphMax
@@ -157,31 +145,13 @@ object ScaleSmoke {
     // the measured 16g G1-region cliff); the bench JVM's 8 g leaves the
     // late phases' aggregates execution-starved (AGGREGATE_OUT_OF_MEMORY).
     import spark.implicits._
-    val meter = new ShuffleMeter
-    spark.sparkContext.addSparkListener(meter)
-    def t[A](name: String)(body: => A): (A, Long, Long) = {
-      org.apache.spark.graft.ListenerBusDrain.waitUntilEmpty(spark.sparkContext)
-      meter.reset()
-      val t0 = System.nanoTime()
-      val r = body
-      org.apache.spark.graft.ListenerBusDrain.waitUntilEmpty(spark.sparkContext)
-      println(f"$name%-44s ${(System.nanoTime() - t0) / 1e9}%7.2f s  " +
-        f"stages ${meter.stages.get}%3d  shuffle r/w " +
-        f"${meter.read.get / 1048576.0}%.0f/${meter.write.get / 1048576.0}%.0f MB")
-      (r, meter.read.get, meter.write.get)
-    }
-    def sweep(): Unit =
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+    val trace = graft.QueryTrace(spark)
+    def t[A](name: String)(body: => A): (A, Long, Long) = timed(trace, name)(body)
+    def sweep(): Unit = graft.GraftSession.sweepCaches(spark)
     // free each phase's internal reuse caches WITHOUT truncating a carried
     // localCheckpoint store the next phase still reads
-    def backing(df: org.apache.spark.sql.DataFrame): Set[Int] =
-      df.queryExecution.analyzed.collect {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
-      }.toSet
-    def sweepExcept(keep: Set[Int]): Unit = {
-      spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-        if (!keep.contains(id)) rdd.unpersist(false)
-      }
+    def sweepExcept(keep: org.apache.spark.sql.DataFrame): Unit = {
+      graft.GraftSession.sweepCaches(spark, keep)
       // broadcast blocks (the broadcastDelta phase pins a ~100 MB probe)
       // release via ContextCleaner WEAK references — without a forced GC
       // the default 30-min periodic GC leaves them resident and the next
@@ -257,8 +227,7 @@ object ScaleSmoke {
           "must be 0 under the 61-bit decorrelated kernel")
       graft.operators.Dedup.cachedForReuse(sigs1)
     }
-    val keepStore = backing(store2)
-    sweepExcept(keepStore) // d1's internal kernels, not the carried store
+    sweepExcept(store2) // d1's internal kernels, not the carried store
     if (bdOnly) {
       // broadcastDelta runs in its OWN invocation (`incr-bd`): the store's
       // band index is semi-join-filtered map-side and the verify probes
@@ -370,7 +339,7 @@ object ScaleSmoke {
       val c2 = s2.count()
       require(c2 == 0, s"d2 survivors $c2 != 0 (all twin-seconds)")
     }
-    sweepExcept(keepStore)
+    sweepExcept(store2)
     val (_, rc, wc) = t(s"neardedup_delta d2 CONTROL (empty store)") {
       val (s2c, _) = graft.operators.Incremental.nearDedupDelta(
         d2, manifest0, "shard", emptySigs, "id", "text",
@@ -486,21 +455,10 @@ object ScaleSmoke {
     import spark.implicits._
     import graft.transformers.Transformers.IncrState
     import graft.operators.{Dedup, Incremental, Similarity}
-    val meter = new ShuffleMeter
-    spark.sparkContext.addSparkListener(meter)
-    def t[A](name: String)(body: => A): (A, Long, Long) = {
-      org.apache.spark.graft.ListenerBusDrain.waitUntilEmpty(spark.sparkContext)
-      meter.reset()
-      val t0 = System.nanoTime()
-      val r = body
-      org.apache.spark.graft.ListenerBusDrain.waitUntilEmpty(spark.sparkContext)
-      println(f"$name%-52s ${(System.nanoTime() - t0) / 1e9}%7.2f s  " +
-        f"stages ${meter.stages.get}%3d  shuffle r/w " +
-        f"${meter.read.get / 1048576.0}%.0f/${meter.write.get / 1048576.0}%.0f MB")
-      (r, meter.read.get, meter.write.get)
-    }
+    val trace = graft.QueryTrace(spark)
+    def t[A](name: String)(body: => A): (A, Long, Long) = timed(trace, name)(body)
     def sweep(): Unit = {
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      graft.GraftSession.sweepCaches(spark)
       System.gc() // release broadcast/checkpoint blocks via ContextCleaner
     }
     val stateRoot = s"target/scalesmoke_bk_${which}_$n"
@@ -749,54 +707,28 @@ object ScaleSmoke {
   }
 
   def main(args: Array[String]): Unit = {
-    if (args.headOption.exists(a => a.startsWith("incr-bk-"))) {
+    val tier = args.headOption.filter(a =>
+      Set("graph", "incr", "incr-bd", "incr-bk")(a) || a.startsWith("incr-bk-"))
+    if (tier.nonEmpty) {
       val n = args.lift(1).map(_.toLong).getOrElse(20000000L)
-      val spark = SparkSession.builder().master("local[32]")
-        .config("spark.sql.shuffle.partitions", "128")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false").getOrCreate()
-      spark.sparkContext.setLogLevel("ERROR")
-      bucketedStoreTier(spark, n, args.head.stripPrefix("incr-bk-"))
-      spark.stop()
-      return
-    }
-    if (args.headOption.exists(a => a == "incr" || a == "incr-bd" || a == "incr-bk")) {
-      val n = args.lift(1).map(_.toLong).getOrElse(20000000L)
-      val spark = SparkSession.builder().master("local[32]")
-        .config("spark.sql.shuffle.partitions", "128")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false").getOrCreate()
-      spark.sparkContext.setLogLevel("ERROR")
-      incrTier(spark, n, bdOnly = args.headOption.contains("incr-bd"),
-        bkOnly = args.headOption.contains("incr-bk"))
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("graph")) {
-      val n = args.lift(1).map(_.toLong).getOrElse(20000000L)
-      // 128 shuffle partitions at the 20M tier: ~150k edge rows per task
+      // 128 shuffle partitions at the 20M tiers: ~150k edge rows per task
       // keeps every peel/star round's per-task state well inside the 8g
       // measured heap (the per-partition sizing a cluster submit would set
       // via spark.sql.files.maxPartitionBytes / shuffle.partitions)
-      val spark = SparkSession.builder().master("local[32]")
-        .config("spark.sql.shuffle.partitions", "128")
-        .config("spark.ui.enabled", "false").getOrCreate()
-      spark.sparkContext.setLogLevel("ERROR")
-      graphTier(spark, n)
+      val spark = graft.GraftSession(partitions = Some(128))
+      tier.get match {
+        case "graph" => graphTier(spark, n)
+        case a if a.startsWith("incr-bk-") =>
+          bucketedStoreTier(spark, n, a.stripPrefix("incr-bk-"))
+        case a => incrTier(spark, n, bdOnly = a == "incr-bd", bkOnly = a == "incr-bk")
+      }
       spark.stop()
       return
     }
     val n = args.headOption.map(_.toLong).getOrElse(2000000L)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    def t[A](name: String)(body: => A): A = {
-      val t0 = System.nanoTime()
-      val r = body
-      println(f"$name%-28s ${(System.nanoTime() - t0) / 1e9}%7.2f s")
-      r
-    }
+    val spark = graft.GraftSession()
+    val trace = graft.QueryTrace(spark)
+    def t(name: String)(body: => Unit): Unit = timed(trace, name)(body)
     val docs = spark.range(1, n + 1).toDF("doc_id")
       .withColumn("n_tokens", (col("doc_id") * 131 % 997) + 1)
     t(s"prefix_sum n=$n") {

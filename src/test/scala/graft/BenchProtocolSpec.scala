@@ -16,11 +16,12 @@ class BenchProtocolSpec extends AnyFunSuite {
     val boom = (s: org.apache.spark.sql.SparkSession, d: String) => {
       s.range(5).toDF("x").filter(expr("assert_true(x < 2, 'boom')").isNull)
     }
-    val res = Bench.runQueries("/root/testdata/sf0.001", "4", " spec",
-      Seq("z_good" -> good, "z_boom" -> boom), 2, stopSession = false)
+    val res = Bench.runQueries("/root/testdata/sf0.001", " spec",
+      Seq("z_good" -> good, "z_boom" -> boom), 2, session = Some(spark))
     val byName = res.map(r => r._1 -> r._3).toMap
     assert(byName("z_good") == false)
     assert(byName("z_boom") == true, "throwing query must carry the error flag")
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "4", "the shared session is untouched")
   }
 
   test("memo eviction: evict removes the entry and unpersists its blocks; rebuild pays again") {
@@ -83,5 +84,25 @@ class BenchProtocolSpec extends AnyFunSuite {
       "a memo hit must drain as consumed")
     assert(graft.queries.Shared.drainConsumed().isEmpty, "drain clears")
     graft.queries.Shared.evict(Set(key))
+  }
+
+  test("telemetry: per-query cost fields keep their order and append shuffle and spill bytes") {
+    def stage(tasks: Int, read: Long, write: Long, spill: Long) =
+      QueryTrace.Stage(0, "s", tasks, 0, read, write, spill, 0, 0, 0, None)
+    val d = QueryTrace.Totals(jobs = 3, jitMs = 1, gcMs = 2, stageLog = Vector(
+      stage(2, 6, 3, 8), stage(1, 0, 4, 0), stage(2, 0, 0, 0), stage(0, 0, 0, 0)))
+    assert(d.summary ==
+      "jit +1ms gc +2ms  jobs 3 stages 4 tasks 5  shuffle r/w 6/7 B  spill 8 B")
+  }
+
+  test("total record: existing fields in order, then cpus and shuffle_partitions") {
+    val results = Seq(("q_a", 1.0, false), ("q_b", 2.5, true))
+    assert(Bench.totalRecord(results, "/sf", Seq("q_a"), cpus = 6) ==
+      """{"metric":"total","value":1.0,"unit":"sec","n_queries":2,"errors":1,""" +
+      """"failed":["q_b"],"total_with_errors":3.5,"stalled":["q_a"],"sf":"/sf",""" +
+      """"cpus":6,"shuffle_partitions":6}""")
+    assert(Bench.totalRecord(results.take(1), "/sf", Nil, cpus = 4, ""","queries":{"q_a":1.0}""") ==
+      """{"metric":"total","value":1.0,"unit":"sec","n_queries":1,"errors":0,""" +
+      """"queries":{"q_a":1.0},"sf":"/sf","cpus":4,"shuffle_partitions":4}""")
   }
 }

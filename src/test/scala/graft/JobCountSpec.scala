@@ -16,22 +16,12 @@ class JobCountSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val sf = "/root/testdata/sf0.001"
 
-  private lazy val jobs = {
-    val counter = new java.util.concurrent.atomic.AtomicInteger
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        counter.incrementAndGet(); ()
-      }
-    })
-    counter
-  }
+  private lazy val trace = QueryTrace(spark)
 
-  private def jobsFor(name: String): Int = {
-    org.apache.spark.graft.ListenerBusDrain.waitUntilEmpty(spark.sparkContext)
-    val j0 = jobs.get()
+  private def jobsFor(name: String): Long = {
+    val before = trace.snapshot()
     SparkEntry.queries(name)(spark, sf).count()
-    org.apache.spark.graft.ListenerBusDrain.waitUntilEmpty(spark.sparkContext)
-    jobs.get() - j0
+    (trace.snapshot() - before).jobs
   }
 
   test("iterative and report queries stay within their job budgets") {
@@ -47,9 +37,10 @@ class JobCountSpec extends AnyFunSuite {
       "dd11_dup_clusters" -> 23, // kernel + CC first build + report
       "dd14_cluster_keep_best" -> 8, // memo hit
       "dd26_semdedup" -> 27, // Lloyd training + CC + report
-      // round-8 second-sitting additions (measured at sf0.1 via ProfQueries,
-      // +30% headroom): the one-window-pass probe ranking keeps sim10 flat
-      // in |probes|, and the peel loop keeps q_kcore at a handful of rounds
+      // round-8 second-sitting additions (job counts at sf0.1 as
+      // graft.tools.Trace reports them, +30% headroom): the one-window-pass
+      // probe ranking keeps sim10 flat in |probes|, and the peel loop keeps
+      // q_kcore at a handful of rounds
       "w20_trix" -> 6,
       "m33_mann_whitney" -> 5,
       "sim10_ivf_recall" -> 16,
@@ -87,9 +78,9 @@ class JobCountSpec extends AnyFunSuite {
       val n = jobsFor(name)
       if (n > bound) Some(s"$name: $n jobs > budget $bound") else None
     }
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
     graft.queries.Shared.clear()
+    GraftSession.sweepCaches(spark)
+    trace.stop()
     assert(over.isEmpty, over.mkString("; "))
   }
 }
