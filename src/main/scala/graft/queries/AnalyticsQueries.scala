@@ -332,10 +332,10 @@ object AnalyticsQueries {
     * r9 bench anomaly (12.1 s, jit +989 ms, 6 tasks) investigated r10:
     * NOT the plan — reproduces at 0.6–1.0 s warm/cold in isolation AND
     * when re-run directly after q_peak_concurrency's 17 s JIT burst
-    * (3 standalone runs each, `graft.tools.Trace`); the one-off driver
-    * reading is ambient machine contention during the shared-box bench,
-    * the same class as the r3 sim1–sim4 wobble. Plan shape unchanged on
-    * purpose.
+    * (3 standalone runs each, `graft.tools.Trace`); the one-off bench
+    * record reading is ambient machine contention during the shared-box
+    * bench, the same class as the r3 sim1–sim4 wobble. Plan shape
+    * unchanged on purpose.
     */
   val qPriorityTransitions: Q = Q(
     "q_priority_transitions",
